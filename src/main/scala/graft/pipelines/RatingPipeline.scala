@@ -1,5 +1,6 @@
 package graft.pipelines
 
+import graft.core.Shared
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -61,10 +62,16 @@ object RatingPipeline {
           col("call_type").isin("VOICE", "SMS", "DATA"))
   }
 
-  /** Valid / dead-letter split. */
-  def split(normalized: DataFrame): (DataFrame, DataFrame) =
-    (normalized.filter(col("valid")).drop("valid"),
-      normalized.filter(!col("valid")).drop("valid"))
+  /** Valid / dead-letter split. Both halves read one [[Shared]] copy of
+    * `normalized`: across the actions that read them, the input is
+    * parsed and normalized once, by the first of those actions. The kept
+    * rows are freed when both halves are unreferenced, and a lost block is
+    * recomputed from the input. A streaming input is split uncut. */
+  def split(normalized: DataFrame): (DataFrame, DataFrame) = {
+    val shared = Shared(normalized, "normalized cdrs")
+    (shared.filter(col("valid")).drop("valid"),
+      shared.filter(!col("valid")).drop("valid"))
+  }
 
   /** prerating stage 2: multi-leg (partial CDR) assembly — one call may
     * arrive as N partial records; reassemble by call key, summing
@@ -81,20 +88,24 @@ object RatingPipeline {
   /** gsmrating: as-of tariff lookup (latest tariff version with
     * valid_from <= call start, per call_type — the rate-version shape of
     * SURVEY §2B joins) and charge computation:
-    * setup_fee + ceil(duration/60) * rate_per_min, in exact decimals. */
+    * setup_fee + ceil(duration/60) * rate_per_min, in exact decimals.
+    *
+    * The result is [[Shared]]: the summary and the persisted rated calls
+    * read one computation of it, so a batch runs the assembly shuffle and
+    * the as-of join once. A streaming input is rated uncut. */
   def rate(calls: DataFrame, tariffs: DataFrame): DataFrame = {
     // The engine's as-of operator: tariff-sized right side → broadcast
     // variant, so the call stream is never shuffled for the lookup, and
     // calls predating every tariff version keep a null charge (left-outer).
     val t = tariffs.withColumnRenamed("call_type", "t_call_type")
-    graft.plans.AsOf.join(calls, t,
+    Shared(graft.plans.AsOf.join(calls, t,
         Seq("call_type"), Seq("t_call_type"), "call_start_ts", "valid_from")
       .drop("t_call_type")
       .withColumn("billed_min", ceil(col("duration_sec") / lit(60.0)))
       .withColumn("charge",
         (col("setup_fee").cast(DecimalType(18, 4)) +
           col("billed_min") * col("rate_per_min").cast(DecimalType(18, 4)))
-          .cast(DecimalType(18, 4)))
+          .cast(DecimalType(18, 4))), "rated calls")
   }
 
   /** Usage summary: per (day, call_type) totals — the aggregate a billing
@@ -113,7 +124,13 @@ object RatingPipeline {
   def writeSummary(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").partitionBy("day").parquet(path)
 
-  /** Whole pipeline, batch form. */
+  /** Whole pipeline, batch form. Writes the summary and returns the
+    * rated calls and the dead letters for the caller to persist. One scan
+    * per batch: the CSV is parsed and normalized once and rated once
+    * across the summary write and any later actions on the two returned
+    * frames (see [[split]] and [[rate]]); their kept rows are freed when
+    * the frames are unreferenced, and lost ones are recomputed from the
+    * input. */
   def run(spark: SparkSession, cdrPath: String, tariffs: DataFrame, outPath: String): (DataFrame, DataFrame) = {
     val (valid, dead) = split(normalize(readCdrs(spark, cdrPath)))
     val rated = rate(assembleLegs(valid), tariffs)
@@ -127,7 +144,8 @@ object RatingPipeline {
     * session loop); here the file streaming source provides the
     * new-file-arrival trigger and exactly-once file accounting, and
     * each micro-batch runs the SAME normalize → split → assemble → rate
-    * operators as [[run]]. Outputs land per batch under
+    * operators as [[run]], so the rated and the dead-letter writes of a
+    * micro-batch share one scan of it. Outputs land per batch under
     * `batch_id=<id>` partitions with dynamic partition overwrite, so a
     * RETRIED micro-batch replaces its own output instead of
     * double-billing — the [[graft.etl.IncrementalDedup.sink]] ledger

@@ -1144,12 +1144,7 @@ object AnalyticsQ {
       val span = mm.getLong(1) - mm.getLong(0) + 1
       val c1 = mm.getLong(0) + span / 2
       val c2 = mm.getLong(0) + (5 * span) / 6
-      val store = s"${System.getProperty("java.io.tmpdir")}/graft_q322_" +
-        math.abs(dir.hashCode).toString + "_" +
-        java.lang.ProcessHandle.current().pid().toString
-      val fs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(store), true)
+      val store = scratchDir(s, "q322", dir)
       def wave(lo: Long, hi: Long) = ev
         .filter(col("event_id") >= lo && col("event_id") < hi)
         .select(col("ts"), col("event_type"))
@@ -1301,12 +1296,7 @@ object AnalyticsQ {
       val span = mm.getLong(1) - mm.getLong(0) + 1
       val c1 = mm.getLong(0) + span / 2
       val c2 = mm.getLong(0) + (5 * span) / 6
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_q323_" +
-        math.abs(dir.hashCode).toString + "_" +
-        java.lang.ProcessHandle.current().pid().toString
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
+      val base = scratchDir(s, "q323", dir)
       val store = s"$base/store"
       val log = s"$base/driftlog"
       val snk = graft.etl.IncrementalDrift.sink(s, store, log)

@@ -406,7 +406,10 @@ object GraphQ {
       s"rounds must be in [1, 50], got $rounds")
     def snap(df: DataFrame): DataFrame =
       if (reliable) df.checkpoint() else df.localCheckpoint()
-    val p = snap(pairs.select(col("doc_a"), col("doc_b")))
+    // a self-pair would add (u, u) rows beside the self-loop below and
+    // so duplicate u's initial label, multiplying its round-1 vote
+    val p = snap(pairs.filter(col("doc_a") =!= col("doc_b"))
+      .select(col("doc_a"), col("doc_b")))
     val sym = p.select(col("doc_a").as("u"), col("doc_b").as("v"))
       .unionAll(p.select(col("doc_b").as("u"), col("doc_a").as("v")))
     // round-15: the self-vote (each node's own label, count 1) is folded

@@ -195,12 +195,7 @@ object PacketQ {
     (s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"))
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_q344_" +
-        math.abs(dir.hashCode).toString + "_" +
-        java.lang.ProcessHandle.current().pid().toString
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
+      val base = scratchDir(s, "q344", dir)
       // parity demux at setup: each stage ingests ITS slice, so the
       // monitor's numInputRows (SOURCE rows — a transform-side filter
       // would be invisible to it) is the per-stage prediction; one file

@@ -37,6 +37,20 @@ object Dsl {
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     graft.core.Tables.load(spark, dir, name)
 
+  /** Scratch directory of a query that builds a store, keyed by (fixture
+    * dir, JVM): repeated builds in one process reuse and rebuild the same
+    * store; two processes on the same fixture (a bench beside a verify)
+    * never share a half-written one. Emptied here, deleted at JVM exit. */
+  def scratchDir(spark: SparkSession, query: String, dir: String): String = {
+    val base = s"${System.getProperty("java.io.tmpdir")}/graft_${query}_" +
+      math.abs(dir.hashCode).toString + "_" +
+      java.lang.ProcessHandle.current().pid().toString
+    val p = new org.apache.hadoop.fs.Path(base)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    org.apache.spark.sql.graft.bridge.deleteAtExit(base)
+    base
+  }
+
   /** Exact sum of a double expression, emitted as a 2-decimal double.
     *
     * Inputs cast to DECIMAL(38,8) deliberately: a (18,8) cast is ~12%

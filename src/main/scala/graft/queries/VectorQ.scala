@@ -2647,16 +2647,8 @@ object VectorQ {
       val e8Id = mm.getLong(0) + span / 8
       val q4Id = mm.getLong(0) + span / 4
       val newCells = math.sqrt(mm.getLong(2).toDouble).toInt
-      // keyed by (fixture dir, JVM): repeated builds in one process
-      // reuse and rebuild the same store; two processes on the same
-      // fixture (a bench beside a verify) never share a half-written one
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_q312_" +
-        math.abs(dir.hashCode).toString + "_" +
-        java.lang.ProcessHandle.current().pid().toString
+      val base = scratchDir(s, "q312", dir)
       val store = s"$base/store"; val pairsDir = s"$base/pairs"
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
       def slice(lo: Long, hi: Long) = emb
         .filter(col("vec_id") >= lo && col("vec_id") < hi)
         .select(col("vec_id"), col("embedding"))

@@ -3,9 +3,14 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.collection.mutable
+
 import graft.pipelines.RatingPipeline
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** End-to-end prerating/gsmrating pipeline over a synthetic delimited CDR
   * batch (FIXTURES.md §B): parse → normalize → dead-letter split →
@@ -41,6 +46,125 @@ class RatingPipelineSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft_rated_out").toString
     val (rated, dead) = RatingPipeline.run(spark, dir, tariffs, out)
     (rated.cache(), dead, out)
+  }
+
+  /** One batch to all three sinks, the way a caller persists it: `run`
+    * writes the summary, then the rated calls and the dead letters are
+    * written from the frames it returns. `between` runs after the
+    * summary write. Returns the summary, rated and dead output dirs. */
+  private def writeAll(dir: String, between: () => Unit = () => ()) = {
+    val out = Files.createTempDirectory("graft_rated_all").toString
+    val (rated, dead) = RatingPipeline.run(spark, dir, tariffs, s"$out/summary")
+    between()
+    rated.write.parquet(s"$out/rated")
+    dead.write.parquet(s"$out/dead")
+    (s"$out/summary", s"$out/rated", s"$out/dead")
+  }
+
+  private def cdrDir(): String = {
+    val dir = Files.createTempDirectory("graft_cdr_shared").toString
+    Files.writeString(java.nio.file.Path.of(dir, "batch1.csv"), cdrCsv)
+    dir
+  }
+
+  /** The three persisted outputs against the expected values the tests
+    * above check one by one. */
+  private def assertOutputs(summary: String, rated: String, dead: String): Unit = {
+    val sums = spark.read.parquet(summary)
+      .select("call_type", "n_calls", "total_secs", "total_charge")
+      .as[(String, Long, Long, java.math.BigDecimal)].collect()
+      .map(r => r._1 -> ((r._2, r._3, r._4.doubleValue))).toMap
+    assert(sums == Map("VOICE" -> ((2L, 220L, 6.75)), "SMS" -> ((1L, 1L, 0.1))))
+    val byImsi = spark.read.parquet(rated)
+      .select("imsi", "msisdn", "n_legs", "charge")
+      .as[(String, String, Int, java.math.BigDecimal)].collect()
+      .map(r => r._1 -> ((r._2, r._3, r._4.doubleValue))).toMap
+    assert(byImsi == Map(
+      "404551234567890" -> (("919812345678", 2, 4.5)),
+      "404551234567891" -> (("919812345679", 1, 2.25)),
+      "404551234567892" -> (("919812345680", 1, 0.1))))
+    assert(spark.read.parquet(dead).select("imsi").as[String].collect().sorted
+      .sameElements(Array("404551234567893", "404551234567894", "BADIMSI")))
+  }
+
+  test("one batch: summary, rated and dead outputs hold the expected rows") {
+    val (summary, rated, dead) = writeAll(cdrDir())
+    assertOutputs(summary, rated, dead)
+  }
+
+  test("one batch scans its CDR file once across the three writes") {
+    val dir = cdrDir()
+    val seen = mutable.ArrayBuffer.empty[(String, QueryExecution)]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.synchronized(seen += f -> qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      writeAll(dir)
+      // the dead-letter write ends last; its report follows the others'
+      assert(eventually(10000)(seen.synchronized(
+        seen.exists(_._2.executedPlan.toString.contains("/dead")))),
+        seen.synchronized(seen.map(_._1).mkString(", ")))
+    } finally spark.listenerManager.unregister(listener)
+    val helper = new AdaptiveSparkPlanHelper {}
+    val scanned = seen.synchronized(seen.toSeq).flatMap { case (_, qe) =>
+      helper.collectWithSubqueries(qe.executedPlan) {
+        case s: FileSourceScanExec
+            if s.relation.location.rootPaths.exists(_.toString.contains(dir)) =>
+          s.metrics("numOutputRows").value
+      }
+    }.filter(_ > 0)
+    // 7 data lines in the file, read by exactly one executed scan
+    assert(scanned == Seq(7L), scanned.mkString(", "))
+  }
+
+  test("shared rows dropped between the writes are recomputed from the input") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keys.toSet
+    val (summary, rated, dead) = writeAll(cdrDir(), () => {
+      val kept = sc.getPersistentRDDs.values.filterNot(r => before(r.id)).toSeq
+      assert(sc.getRDDStorageInfo.exists(i =>
+        kept.exists(_.id == i.id) && i.numCachedPartitions > 0), "no rows kept")
+      kept.foreach(_.unpersist(blocking = true))
+    })
+    assertOutputs(summary, rated, dead)
+  }
+
+  test("shared rows are freed once the frames are unreachable") {
+    val sc = spark.sparkContext
+    // ids only: a key-set view of the map would keep the RDDs reachable
+    def sharedIds = sc.getPersistentRDDs.collect {
+      case (id, r) if Option(r.name).exists(_.startsWith("shared ")) => id
+    }.toSet
+    val before = sharedIds
+    writeAll(cdrDir())
+    val kept = sharedIds -- before
+    assert(kept.size == 2, s"expected the two shared cuts of one batch, got $kept")
+    assert(eventually(20000) { System.gc(); (sharedIds intersect kept).isEmpty },
+      s"still kept: ${sharedIds intersect kept}")
+  }
+
+  test("split and rate pass a streaming frame through uncut") {
+    val dir = cdrDir()
+    val stream = spark.readStream.schema(RatingPipeline.cdrSchema)
+      .option("header", "true").csv(dir)
+    val (valid, dead) = RatingPipeline.split(RatingPipeline.normalize(stream))
+    val rated = RatingPipeline.rate(valid, tariffs)
+    assert(valid.isStreaming && dead.isStreaming && rated.isStreaming)
+    val got = mutable.ArrayBuffer.empty[(String, Long)]
+    def sink(name: String, df: DataFrame) = df.writeStream
+      .option("checkpointLocation",
+        Files.createTempDirectory(s"graft_uncut_$name").toString)
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        got.synchronized { got += name -> b.count(); () } }
+      .start()
+    val queries = Seq(sink("rated", rated), sink("dead", dead))
+    try queries.foreach(_.processAllAvailable())
+    finally queries.foreach(_.stop())
+    // per leg: the stream is rated without assembly, 4 valid legs
+    assert(got.synchronized(got.toMap) == Map("rated" -> 4L, "dead" -> 3L))
   }
 
   test("dead-letter split catches bad IMSI, negative duration, unknown type") {

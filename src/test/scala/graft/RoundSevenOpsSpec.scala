@@ -199,6 +199,18 @@ class RoundSevenOpsSpec extends SparkSpec {
     assert(comp(1L) == comp(10L))
   }
 
+  test("labelPropagation: a self-pair in the input leaves the labels unchanged") {
+    // path 1-2-9: node 2's round-1 vote is a three-way tie, broken toward
+    // label 1; a duplicated initial label for node 9 would outvote it
+    val pairs = Seq((1L, 2L), (2L, 9L)).toDF("doc_a", "doc_b")
+    val withSelf = pairs.union(Seq((9L, 9L)).toDF("doc_a", "doc_b"))
+    def lpa(p: org.apache.spark.sql.DataFrame) =
+      GraphQ.labelPropagation(p, rounds = 3).as[(Long, Long)].collect().toMap
+    val want = lpa(pairs)
+    assert(want == Map(1L -> 1L, 2L -> 1L, 9L -> 1L), want.toString)
+    assert(lpa(withSelf) == want)
+  }
+
   // --- q199 k-fold -----------------------------------------------------
 
   test("kFoldSplit puts near-duplicate docs in the same fold") {

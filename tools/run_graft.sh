@@ -3,7 +3,14 @@
 # (tools: refresh with `sbt "export Runtime/fullClasspath"` > /tmp/graft_cp.txt).
 # Mirrors build.sbt's fork javaOptions (JDK17 add-opens, UTC, no UI).
 # Usage: run_graft.sh <mainClass> [args...]
-CP=$(cat /tmp/graft_cp.txt)
+set -euo pipefail
+CP_FILE=/tmp/graft_cp.txt
+if [[ ! -r $CP_FILE ]]; then
+  echo "run_graft.sh: no readable classpath file $CP_FILE; create it with:" >&2
+  echo "  sbt \"export Runtime/fullClasspath\" > $CP_FILE" >&2
+  exit 1
+fi
+CP=$(cat "$CP_FILE")
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
