@@ -9,11 +9,31 @@ import org.apache.spark.sql.SparkSession
   * session with sane scale-oriented defaults: AQE on (runtime re-plan,
   * skew-join splitting), UTC timezone (oracle parity), shuffle parallelism
   * sized to the machine rather than the 200 default.
+  *
+  * `file:` paths go through [[ForkFreeLocalFileSystem]] (FileSystem) and
+  * [[ForkFreeLocalFs]] (FileContext). Spark's Hadoop client runs without
+  * the native Hadoop library (`NativeCodeLoader` warns at start-up), so
+  * Hadoop's stock local filesystem shells out to
+  * `chmod` on every file create and `mkdirs`, and to `readlink` on every
+  * `getFileLinkStatus` (twice per FileContext rename). A streaming
+  * checkpoint write pays both on each offset, commit, sink-metadata and
+  * state-store file. Measured per operation on a 4-core Linux host
+  * (JDK 17, Hadoop 3.4.2), stock vs adapter: an atomic checkpoint write
+  * (`CheckpointFileManager.createAtomic`, 10 process spawns) 28-30 ms vs
+  * 1.3-1.7 ms; a FileContext rename (8 `readlink`s with the `.crc`)
+  * 21-22 ms vs 0.3 ms; a FileSystem create+close (2 `chmod`s) 6-6.5 ms
+  * vs 0.2-0.35 ms. The adapter spawns no process for any of them.
+  * Only `file:` is rebound; HDFS and object stores are untouched, and a
+  * `spark.hadoop.fs.file.impl` or
+  * `spark.hadoop.fs.AbstractFileSystem.file.impl` set on the builder
+  * afterwards, or as a system property, wins.
   */
 object GraftSession {
 
   def builder(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession.Builder =
-    SparkSession.builder()
+    ForkFreeLocalFs.sessionConf
+      .filterNot { case (k, _) => sys.props.contains(k) }
+      .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -278,10 +278,41 @@ object IncrementalDrift {
     val wAll = Window.orderBy(col("day"))
     val affected = full
       .withColumn("prev_day", lag(col("day"), 1).over(wAll))
+      // a touched day moves its own row and the next observed day's; a
+      // touched day that is no longer in the store (its stale counts were
+      // dropped) moves the row that now spans it
       .join(touched.select(col("day").as("__td")),
-        col("day") === col("__td") || col("prev_day") === col("__td"),
+        col("__td").between(coalesce(col("prev_day"), col("__td")),
+          col("day")),
         "left_semi")
     affected.select(col("day"), col("n_events"), col("tv_ppm"))
+  }
+
+  /** An EMPTY attempt at `batchId` writes no partition, so dynamic
+    * overwrite would leave a failed earlier attempt's `batch_id=N`
+    * counts (and drift-log rows) in place. Remove both and return the
+    * days those stale counts touched — their drift moves back. */
+  private def dropStaleAttempt(spark: SparkSession, storePath: String,
+      driftLogPath: String, batchId: Long): DataFrame = {
+    import spark.implicits._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val stale = new org.apache.hadoop.fs.Path(countsPath(storePath),
+      s"batch_id=$batchId")
+    val fs = stale.getFileSystem(conf)
+    val days =
+      if (!fs.exists(stale)) Seq.empty[Long]
+      else {
+        val ds = readCounts(spark, storePath)
+          .filter(col("batch_id") === batchId)
+          .select(col("day")).distinct().as[Long].collect().toSeq
+        fs.delete(stale, true)
+        ds
+      }
+    val staleLog = new org.apache.hadoop.fs.Path(driftLogPath,
+      s"batch_id=$batchId")
+    val logFs = staleLog.getFileSystem(conf)
+    if (logFs.exists(staleLog)) logFs.delete(staleLog, true)
+    days.toDF("day")
   }
 
   /** Streaming composition ([[IncrementalDedup.sink]] pattern): per
@@ -290,7 +321,10 @@ object IncrementalDrift {
     * into `driftLogPath` (append-only audit: "the drift as of batch N";
     * the latest row per day is the current verdict, and a late
     * straggler's correction is VISIBLE as a new row rather than a
-    * silent rewrite).
+    * silent rewrite). A retried batch that comes back EMPTY removes the
+    * failed attempt's counts and drift-log rows and logs fresh rows for
+    * the days those counts touched, so the store equals one that never
+    * saw the failed attempt.
     *
     * `compactEvery = Some(n)` runs [[compact]] inside the SAME
     * foreachBatch epoch after every n-th batch — the unattended-stream
@@ -312,8 +346,16 @@ object IncrementalDrift {
       // touched-day set reads the cached blocks instead of re-scanning
       // the batch or re-reading the store partition just written.
       val d = deltas(batch, typeCol).localCheckpoint(false)
-      writeDeltas(d, storePath, batchId)
-      deltaDriftTouched(spark, storePath, d.select(col("day")).distinct())
+      // the written row count rides the append as an Observation — no
+      // extra job on the non-empty path
+      val written = Observation()
+      writeDeltas(d.observe(written, count(lit(1)).as("rows")), storePath,
+        batchId)
+      val touched =
+        if (written.get("rows").asInstanceOf[Long] > 0L)
+          d.select(col("day")).distinct()
+        else dropStaleAttempt(spark, storePath, driftLogPath, batchId)
+      deltaDriftTouched(spark, storePath, touched)
         .withColumn("batch_id", lit(batchId))
         .write.partitionBy("batch_id")
         .option("partitionOverwriteMode", "dynamic")

@@ -36,19 +36,6 @@ class DemuxChainSpec extends SparkSpec {
         .getBytes("UTF-8"))
   }
 
-  private def withRocks[A](f: => A): A = {
-    val prior = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prior match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   private def ratedSet(dir: String): Set[(Long, Long, Long, Long, Long)] =
     spark.read.parquet(dir)
       .select(col("account_id"), col("event_id"), col("units"),
@@ -58,7 +45,7 @@ class DemuxChainSpec extends SparkSpec {
   test("rated records fan to invoice + fraud over the packet plane, " +
       "exactly-once across a whole-topology kill-and-restart, and the " +
       "fraud tap's VelocityMonitor fires on the burst account") {
-    withRocks {
+    withRocksDbState {
       val base = Files.createTempDirectory("graft_demuxchain").toString
       val dim = LiveRatingChain.routingDim(spark, s"$base/routedim")
       dim.publish(Seq(("invoice", true), ("fraud", true))
@@ -131,7 +118,7 @@ class DemuxChainSpec extends SparkSpec {
 
   test("a re-route published mid-run lands the NEXT batch on the new " +
       "class set with no restart, route_ver audit-stamped") {
-    withRocks {
+    withRocksDbState {
       val base = Files.createTempDirectory("graft_demuxreroute").toString
       val dim = LiveRatingChain.routingDim(spark, s"$base/routedim")
       dim.publish(Seq(("invoice", true), ("fraud", true))

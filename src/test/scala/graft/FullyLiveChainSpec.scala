@@ -49,22 +49,9 @@ class FullyLiveChainSpec extends SparkSpec {
         .getBytes("UTF-8"))
   }
 
-  private def withRocks[A](f: => A): A = {
-    val prior = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prior match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   test("a port AND an amendment land mid-run with no restart, and the " +
       "streamed chain equals the batch replay under the final timelines") {
-    withRocks {
+    withRocksDbState {
       val base = Files.createTempDirectory("graft_fullylive").toString
       val numberDim = new VersionedDim(spark, s"$base/numdim",
         PreratingQ.validateVersionedDim)
@@ -154,7 +141,7 @@ class FullyLiveChainSpec extends SparkSpec {
 
   test("the HARDENED fully-live chain drops a redelivered wave whole " +
       "while ports and amendments land live — parity on deduped traffic") {
-    withRocks {
+    withRocksDbState {
       val base = Files.createTempDirectory("graft_fullylivehard").toString
       val numberDim = new VersionedDim(spark, s"$base/numdim",
         PreratingQ.validateVersionedDim)

@@ -26,20 +26,8 @@ class HardenedIngestSpec extends SparkSpec {
         .getBytes("UTF-8"))
   }
 
-  private def withRocks[A](f: => A): A = {
-    val prior = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prior match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   test("a re-delivered file under a new name does not double-bill") {
-    withRocks {
+    withRocksDbState {
       val base = Files.createTempDirectory("graft_hardened").toString
       val runner = new PipelineRunner(spark)
       try {
@@ -76,7 +64,7 @@ class HardenedIngestSpec extends SparkSpec {
   }
 
   test("two identical files inside one micro-batch bill once") {
-    withRocks {
+    withRocksDbState {
       val base = Files.createTempDirectory("graft_hardened2").toString
       val runner = new PipelineRunner(spark)
       try {
@@ -185,7 +173,7 @@ class HardenedIngestSpec extends SparkSpec {
   }
 
   test("a schema-drifted wave trips the gate before polluting the store") {
-    withRocks {
+    withRocksDbState {
       val base = Files.createTempDirectory("graft_driftgate").toString
       val runner = new PipelineRunner(spark)
       try {

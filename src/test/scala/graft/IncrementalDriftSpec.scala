@@ -209,4 +209,37 @@ class IncrementalDriftSpec extends SparkSpec {
     assert(table(IncrementalDrift.drift(spark, store)) ==
       table(AnalyticsQ.tvDriftCard(ev(Seq((0, "A"), (1, "B"))))))
   }
+
+  test("an empty retry drops the failed attempt's counts and logs fresh " +
+      "drift for the days they touched") {
+    val store = Files.createTempDirectory("graft_driftretry").toString
+    val log = s"$store/driftlog"
+    val sink = IncrementalDrift.sink(spark, store, log)
+    val clean = Files.createTempDirectory("graft_driftclean").toString
+    val cleanSink = IncrementalDrift.sink(spark, clean, s"$clean/driftlog")
+    // batch 0: day0 2A+2B, day2 4A
+    val w0 = Seq((0, "A"), (0, "A"), (0, "B"), (0, "B"),
+      (2, "A"), (2, "A"), (2, "A"), (2, "A"))
+    sink(ev(w0), 0L)
+    cleanSink(ev(w0), 0L)
+    // batch 1's failed attempt lands two B rows on day 0 and opens day 1;
+    // its retry comes back empty
+    sink(ev(Seq((0, "B"), (0, "B"), (1, "B"))), 1L)
+    sink(ev(Seq.empty), 1L)
+    val drift = table(IncrementalDrift.drift(spark, store))
+    assert(drift == table(IncrementalDrift.drift(spark, clean)),
+      s"the failed attempt still counts: $drift")
+    assert(drift == Seq((0L, 4L, None), (2L, 4L, Some(500000L))),
+      drift.toString)
+    // batch 1's log rows are fresh: day 0, and day 2, whose previous day
+    // is day 0 again once the attempt's day 1 is gone
+    val logged = table(spark.read.parquet(log).filter(col("batch_id") === 1L))
+    assert(logged == drift, s"batch-1 audit rows: $logged")
+    val latest = table(spark.read.parquet(log)
+      .withColumn("__rn", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("day"))
+          .orderBy(col("batch_id").desc)))
+      .filter(col("__rn") === 1))
+    assert(latest == drift, s"latest verdict per day: $latest")
+  }
 }

@@ -58,10 +58,7 @@ class LegAssemblySpec extends SparkSpec {
 
   test("streaming LegAssembler agrees with the batch twin, timeouts included") {
     implicit val ctx = spark.sqlContext
-    val prior = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState {
       val in = MemoryStream[Leg]
       val out = in.toDS().groupByKey(_.call_id)
         .transformWithState(new LegAssembler(timeoutMs = 300),
@@ -99,13 +96,6 @@ class LegAssemblySpec extends SparkSpec {
           s"streaming ${rowsNow().keySet} vs batch ${batch.keySet}")
         assert(rowsNow() == batch, s"${rowsNow()} vs $batch")
       } finally q.stop()
-    } finally {
-      prior match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 }

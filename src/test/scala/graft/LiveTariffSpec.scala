@@ -40,22 +40,9 @@ class LiveTariffSpec extends SparkSpec {
         .getBytes("UTF-8"))
   }
 
-  private def withRocks[A](f: => A): A = {
-    val prior = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prior match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   test("a mid-cycle tariff amendment rates the next batch at the new " +
       "version with exact parity to the batch card — no restart") {
-    withRocks {
+    withRocksDbState {
       val base = Files.createTempDirectory("graft_livetariff").toString
       val dim = new VersionedDim(spark, s"$base/tariffdim",
         EventQ.validateTariffTimeline)
@@ -131,7 +118,7 @@ class LiveTariffSpec extends SparkSpec {
 
   test("calls in uncovered time land under covered=false, unrated and " +
       "never dropped") {
-    withRocks {
+    withRocksDbState {
       val base = Files.createTempDirectory("graft_tariffgap").toString
       val dim = new VersionedDim(spark, s"$base/tariffdim",
         EventQ.validateTariffTimeline)

@@ -37,10 +37,7 @@ class MarginalRaterSpec extends SparkSpec {
 
   test("streaming MarginalRater agrees with the batch operator across batch splits") {
     implicit val ctx = spark.sqlContext
-    val prior = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState {
       val in = MemoryStream[UsageRec]
       val out = in.toDS().groupByKey(_.account_id)
         .transformWithState(new MarginalRater(tiers), TimeMode.None(),
@@ -64,13 +61,6 @@ class MarginalRaterSpec extends SparkSpec {
           .groupBy(_.account_id).view.mapValues(_.map(_.charge_centi).sum)
         assert(byAcct(7L) == 75000L && byAcct(8L) == 1500L, byAcct.toMap.toString)
       } finally q.stop()
-    } finally {
-      prior match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 }

@@ -123,71 +123,63 @@ class PacketQueueSinkSpec extends SparkSpec {
     // untouched (the StageSpec seam), kill-and-restart exactly-once,
     // rated output identical to the parquet-handoff chain's numbers
     import org.apache.spark.sql.types._
-    val prior = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val base = Files.createTempDirectory("graft_pktchain2").toString
-    val runner = new graft.streaming.PipelineRunner(spark)
-    try {
-      val tiers = Seq((0L, 100L, 5L), (100L, 300L, 3L),
-        (300L, Long.MaxValue, 1L))
-      val legsSchema = StructType(Seq(
-        StructField("call_id", StringType),
-        StructField("seq", IntegerType),
-        StructField("total", IntegerType),
-        StructField("duration_sec", DoubleType),
-        StructField("valid", BooleanType)))
-      Files.createDirectories(Paths.get(s"$base/inbox"))
-      Files.createDirectories(Paths.get(s"$base/legsqueue"))
-      write(s"$base/inbox/w1.csv", legsCsv(Seq(
-        "1:101,1,2,60.0", "1:101,2,2,40.0", "2:201,1,1,250.0",
-        "bogus,1,1,10.0")))
-      val std = LiveRatingChain.stages(spark, s"$base/inbox",
-        s"$base/legs-unused", s"$base/calls", s"$base/rated",
-        s"$base/ckpt", tiers)
-      val ingest = std(0).copy(sink = PacketQueueSink.sink(spark,
-        s"$base/legsdata", s"$base/legsqueue", s"$base/ckpt/cdr_ingest"))
-      val assembly = std(1).copy(source = s => s.readStream
-        .format("packetqueue").schema(legsSchema)
-        .option("path", s"$base/legsqueue")
-        .option("root", s"$base/legsdata")
-        .option("archive", "true").load())
-      val swapped = Seq(ingest, assembly, std(2))
-      swapped.foreach(runner.register)
-      var qs = swapped.map(s => runner.start(s.name))
-      qs.foreach(_.processAllAvailable())
-      qs.foreach(_.processAllAvailable())
-      def rated() = spark.read.parquet(s"$base/rated")
-        .select(col("account_id").cast(LongType), col("event_id"),
-          col("charge_centi"))
-        .as[(Long, Long, Long)].collect().toSet
-      // same numbers as every other handoff: T(100)=500, T(250)=950
-      assert(rated() == Set((1L, 101L, 500L), (2L, 201L, 950L)),
-        rated().toString)
+    withRocksDbState {
+      val base = Files.createTempDirectory("graft_pktchain2").toString
+      val runner = new graft.streaming.PipelineRunner(spark)
+      try {
+        val tiers = Seq((0L, 100L, 5L), (100L, 300L, 3L),
+          (300L, Long.MaxValue, 1L))
+        val legsSchema = StructType(Seq(
+          StructField("call_id", StringType),
+          StructField("seq", IntegerType),
+          StructField("total", IntegerType),
+          StructField("duration_sec", DoubleType),
+          StructField("valid", BooleanType)))
+        Files.createDirectories(Paths.get(s"$base/inbox"))
+        Files.createDirectories(Paths.get(s"$base/legsqueue"))
+        write(s"$base/inbox/w1.csv", legsCsv(Seq(
+          "1:101,1,2,60.0", "1:101,2,2,40.0", "2:201,1,1,250.0",
+          "bogus,1,1,10.0")))
+        val std = LiveRatingChain.stages(spark, s"$base/inbox",
+          s"$base/legs-unused", s"$base/calls", s"$base/rated",
+          s"$base/ckpt", tiers)
+        val ingest = std(0).copy(sink = PacketQueueSink.sink(spark,
+          s"$base/legsdata", s"$base/legsqueue", s"$base/ckpt/cdr_ingest"))
+        val assembly = std(1).copy(source = s => s.readStream
+          .format("packetqueue").schema(legsSchema)
+          .option("path", s"$base/legsqueue")
+          .option("root", s"$base/legsdata")
+          .option("archive", "true").load())
+        val swapped = Seq(ingest, assembly, std(2))
+        swapped.foreach(runner.register)
+        var qs = swapped.map(s => runner.start(s.name))
+        qs.foreach(_.processAllAvailable())
+        qs.foreach(_.processAllAvailable())
+        def rated() = spark.read.parquet(s"$base/rated")
+          .select(col("account_id").cast(LongType), col("event_id"),
+            col("charge_centi"))
+          .as[(Long, Long, Long)].collect().toSet
+        // same numbers as every other handoff: T(100)=500, T(250)=950
+        assert(rated() == Set((1L, 101L, 500L), (2L, 201L, 950L)),
+          rated().toString)
 
-      // kill the whole topology, land a wave while down, restart
-      runner.stopAll()
-      write(s"$base/inbox/w2.csv", legsCsv(Seq("1:102,1,1,50.0")))
-      qs = swapped.map(s => runner.start(s.name))
-      qs.foreach(_.processAllAvailable())
-      qs.foreach(_.processAllAvailable())
-      // acct 1: T(150) - T(100) = 150 marginal — nothing re-billed
-      assert(rated() == Set((1L, 101L, 500L), (2L, 201L, 950L),
-        (1L, 102L, 150L)), rated().toString)
-      // the dead letter crossed the packet plane too (valid=false rows
-      // ride the data files; assembly's unchanged transform drops them).
-      // Read the data files directly: with archive on, the QUEUE is
-      // single-consumer by design — retention is consumption
-      assert(spark.read.schema(legsSchema).option("header", "true")
-        .csv(s"$base/legsdata").filter(!col("valid")).count() == 1)
-    } finally {
-      runner.stopAll()
-      prior match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
+        // kill the whole topology, land a wave while down, restart
+        runner.stopAll()
+        write(s"$base/inbox/w2.csv", legsCsv(Seq("1:102,1,1,50.0")))
+        qs = swapped.map(s => runner.start(s.name))
+        qs.foreach(_.processAllAvailable())
+        qs.foreach(_.processAllAvailable())
+        // acct 1: T(150) - T(100) = 150 marginal — nothing re-billed
+        assert(rated() == Set((1L, 101L, 500L), (2L, 201L, 950L),
+          (1L, 102L, 150L)), rated().toString)
+        // the dead letter crossed the packet plane too (valid=false rows
+        // ride the data files; assembly's unchanged transform drops them).
+        // Read the data files directly: with archive on, the QUEUE is
+        // single-consumer by design — retention is consumption
+        assert(spark.read.schema(legsSchema).option("header", "true")
+          .csv(s"$base/legsdata").filter(!col("valid")).count() == 1)
+      } finally {
+        runner.stopAll()
       }
     }
   }

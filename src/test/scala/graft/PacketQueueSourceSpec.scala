@@ -108,45 +108,38 @@ class PacketQueueSourceSpec extends SparkSpec {
     // swap ONLY StageSpec.source — transform (validation) and sink
     // (dead-letter partitioning) are the registered stage's own,
     // proving the COVERAGE.md seam claim
-    val prior = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val base = Files.createTempDirectory("graft_pktchain").toString
-    val runner = new PipelineRunner(spark)
-    try {
-      write(s"$base/data/w1.csv", legsCsv(Seq(
-        "1:101,1,2,60.0", "1:101,2,2,40.0", "2:201,1,1,250.0",
-        "xyz,1,1,10.0")))
-      write(s"$base/queue/p000.pkt", s"s=1\nf=$base/data/w1.csv")
-      val tiers = Seq((0L, 100L, 5L), (100L, 300L, 3L),
-        (300L, Long.MaxValue, 1L))
-      val base3 = LiveRatingChain.stages(spark, "/nonexistent", s"$base/legs",
-        s"$base/calls", s"$base/rated", s"$base/ckpt", tiers)
-      val swapped = base3.head.copy(source = s => s.readStream
-        .format("packetqueue").schema(LiveRatingChain.legSchema)
-        .option("path", s"$base/queue").option("root", s"$base/data")
-        .load()) +: base3.tail
-      swapped.foreach(runner.register)
-      val qs = swapped.map(s => runner.start(s.name))
-      qs.foreach(_.processAllAvailable())
-      qs.foreach(_.processAllAvailable())
-      val rated = spark.read.parquet(s"$base/rated")
-        .select(col("account_id").cast(LongType), col("event_id"),
-          col("charge_centi"))
-        .as[(Long, Long, Long)].collect().toSet
-      // T(100) = 500; T(250) = 950 — same numbers as the file-source run
-      assert(rated == Set((1L, 101L, 500L), (2L, 201L, 950L)),
-        rated.toString)
-      // the malformed leg dead-lettered by the UNCHANGED transform
-      assert(spark.read.parquet(s"$base/legs")
-        .filter(!col("valid").cast("boolean")).count() == 1)
-    } finally {
-      runner.stopAll()
-      prior match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    withRocksDbState {
+      val base = Files.createTempDirectory("graft_pktchain").toString
+      val runner = new PipelineRunner(spark)
+      try {
+        write(s"$base/data/w1.csv", legsCsv(Seq(
+          "1:101,1,2,60.0", "1:101,2,2,40.0", "2:201,1,1,250.0",
+          "xyz,1,1,10.0")))
+        write(s"$base/queue/p000.pkt", s"s=1\nf=$base/data/w1.csv")
+        val tiers = Seq((0L, 100L, 5L), (100L, 300L, 3L),
+          (300L, Long.MaxValue, 1L))
+        val base3 = LiveRatingChain.stages(spark, "/nonexistent", s"$base/legs",
+          s"$base/calls", s"$base/rated", s"$base/ckpt", tiers)
+        val swapped = base3.head.copy(source = s => s.readStream
+          .format("packetqueue").schema(LiveRatingChain.legSchema)
+          .option("path", s"$base/queue").option("root", s"$base/data")
+          .load()) +: base3.tail
+        swapped.foreach(runner.register)
+        val qs = swapped.map(s => runner.start(s.name))
+        qs.foreach(_.processAllAvailable())
+        qs.foreach(_.processAllAvailable())
+        val rated = spark.read.parquet(s"$base/rated")
+          .select(col("account_id").cast(LongType), col("event_id"),
+            col("charge_centi"))
+          .as[(Long, Long, Long)].collect().toSet
+        // T(100) = 500; T(250) = 950 — same numbers as the file-source run
+        assert(rated == Set((1L, 101L, 500L), (2L, 201L, 950L)),
+          rated.toString)
+        // the malformed leg dead-lettered by the UNCHANGED transform
+        assert(spark.read.parquet(s"$base/legs")
+          .filter(!col("valid").cast("boolean")).count() == 1)
+      } finally {
+        runner.stopAll()
       }
     }
   }

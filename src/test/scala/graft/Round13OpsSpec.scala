@@ -176,11 +176,7 @@ class Round13OpsSpec extends SparkSpec {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import graft.streaming.{BundleRater, BundleRatedRec, UsageRec}
     implicit val ctx = spark.sqlContext
-    val prior = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState {
       val tiers = Seq((0L, 50L, 5L), (50L, Long.MaxValue, 3L))
       val in = MemoryStream[UsageRec]
       val q = in.toDS().groupByKey(_.account_id)
@@ -201,11 +197,6 @@ class Round13OpsSpec extends SparkSpec {
           BundleRatedRec(7L, 3L, 40L, 160L, 0L, 180L),
           BundleRatedRec(8L, 4L, 120L, 120L, 100L, 100L)), got.toString)
       } finally q.stop()
-    } finally prior match {
-      case Some(v) => spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset(
-        "spark.sql.streaming.stateStore.providerClass")
     }
   }
 

@@ -33,10 +33,7 @@ class RouteQualitySpec extends SparkSpec {
 
   test("windowed ASR gauge matches the ordered-feed fold across batches") {
     implicit val ctx = spark.sqlContext
-    val prior = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState {
       // route A stays healthy; route B answers its first 10 calls then
       // goes dead (40 zero-length attempts — the FAS/dead-route shape);
       // route C never fills its window (warm-up must not alarm)
@@ -71,22 +68,12 @@ class RouteQualitySpec extends SparkSpec {
         assert(!got("A").alarm)
         assert(!got("C").alarm && got("C").attempts == 5L)
       } finally q.stop()
-    } finally {
-      prior match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("alarm is a level: a route that stays bad re-alarms every batch") {
     implicit val ctx = spark.sqlContext
-    val prior = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState {
       val in = MemoryStream[RCall]
       val out = in.toDS().groupByKey(_.route)
         .transformWithState(new RouteQualityMonitor(windowN, minAsr),
@@ -102,13 +89,6 @@ class RouteQualitySpec extends SparkSpec {
           .filter(_.alarm)
         assert(alarms.length == 2, alarms.mkString(";"))
       } finally q.stop()
-    } finally {
-      prior match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 }

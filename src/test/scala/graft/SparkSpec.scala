@@ -19,6 +19,19 @@ abstract class SparkSpec extends AnyFunSuite {
   }
   val sfDir = "/root/testdata/sf0.001"
 
+  /** Run `f` with RocksDB as the streaming state store provider, then
+    * restore the session's previous provider setting. */
+  def withRocksDbState[A](f: => A): A = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try f finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   /** Poll `cond` until true or the deadline — for streaming tests where
     * processAllAvailable can't latch (processing-time timers). */
   def eventually(ms: Long)(cond: => Boolean): Boolean = {

@@ -163,10 +163,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.{Leg, LegAssembler, AssembledCall}
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     implicit val ctx = spark.sqlContext
-    val prior = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState {
       val in = MemoryStream[Leg]
       val out = in.toDS().groupByKey(_.call_id)
         .transformWithState(new LegAssembler, TimeMode.None(), OutputMode.Append())
@@ -187,11 +184,6 @@ class StreamingSpec extends SparkSpec {
         // duplicate seq=1 must not double-count duration
         assert(rows == Map("call_a" -> ((2, 15.0, true)), "call_b" -> ((1, 7.0, true))))
       } finally q.stop()
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -199,10 +191,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.{FunnelEvent, FunnelTracker, StageReached}
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     implicit val ctx = spark.sqlContext
-    val prior = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState {
       // the AnalyticsSpec fixture, in micro-batches, deliberately
       // unordered WITHIN a batch (the sort must restore time order)
       val batch1 = Seq(
@@ -243,11 +232,6 @@ class StreamingSpec extends SparkSpec {
           .groupBy(_.stage).view.mapValues(_.length.toLong).toMap
         assert(batch == Map(1L -> streamed(1), 2L -> streamed(2), 3L -> streamed(3)))
       } finally q.stop()
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -255,10 +239,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.{FunnelEvent, FunnelTracker, StageReached}
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     implicit val ctx = spark.sqlContext
-    val prior = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState {
       val in = MemoryStream[FunnelEvent]
       val out = in.toDS().groupByKey(_.user_id)
         .transformWithState(
@@ -291,11 +272,6 @@ class StreamingSpec extends SparkSpec {
         // and the restarted funnel advances normally from there
         assert(eventually(30000)(rowsNow().contains((9L, 2, "click"))))
       } finally q.stop()
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -303,10 +279,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.{Leg, LegAssembler, AssembledCall}
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     implicit val ctx = spark.sqlContext
-    val prior = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState {
       val in = MemoryStream[Leg]
       val out = in.toDS().groupByKey(_.call_id)
         .transformWithState(new LegAssembler(timeoutMs = 300),
@@ -328,11 +301,6 @@ class StreamingSpec extends SparkSpec {
           s"timed-out call never flushed: ${rowsNow()}")
         assert(rowsNow()("call_x") == ((2, 14.0, false)))
       } finally q.stop()
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -340,10 +308,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.{Leg, LegAssembler, AssembledCall}
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     implicit val ctx = spark.sqlContext
-    val prior = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState {
       val in = MemoryStream[Leg]
       // long timeout: the tombstone must outlive the whole test
       val out = in.toDS().groupByKey(_.call_id)
@@ -364,11 +329,6 @@ class StreamingSpec extends SparkSpec {
         assert(eventually(30000)(rowsNow().exists(_.call_id == "call_z")))
         assert(rowsNow().count(_.call_id == "call_r") == 1)
       } finally q.stop()
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -609,10 +569,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.{CMon, CObs, CusumMonitor}
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     implicit val ctx = spark.sqlContext
-    val prior = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState {
     val in = MemoryStream[CObs]
     val out = in.toDS().groupByKey(_.key)
       .transformWithState(
@@ -654,11 +611,6 @@ class StreamingSpec extends SparkSpec {
       // day 17 continues the clean recurrence: c_hi grows another 1500
       assert(d17.c_hi == live.map(_.c_hi).max + 1500L, d17.toString)
     } finally q.stop()
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -667,10 +619,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.{EMon, EObs, EwmaMonitor}
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     implicit val ctx = spark.sqlContext
-    val prior = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState {
       val in = MemoryStream[EObs]
       val out = in.toDS().groupByKey(_.key)
         .transformWithState(
@@ -714,11 +663,6 @@ class StreamingSpec extends SparkSpec {
         assert(d6.pred_milli == Some(165024L) &&
           d6.resid_milli == Some(-65024L), d6.toString)
       } finally q.stop()
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -728,10 +672,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.{PFetch, PMon, PolitenessMonitor}
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     implicit val ctx = spark.sqlContext
-    val prior = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState {
       val in = MemoryStream[PFetch]
       val out = in.toDS().groupByKey(_.host)
         .transformWithState(
@@ -791,11 +732,6 @@ class StreamingSpec extends SparkSpec {
         assert(!after.late && after.burst == Some(3L) && after.over,
           after.toString)
       } finally q.stop()
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -805,10 +741,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.{FMon, FObs, ForecastMonitor}
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     implicit val ctx = spark.sqlContext
-    val prior = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState {
       val in = MemoryStream[FObs]
       val out = in.toDS().groupByKey(_.key)
         .transformWithState(
@@ -860,11 +793,6 @@ class StreamingSpec extends SparkSpec {
         assert((m8.level, m8.lo_resid, m8.hi_resid) == b8,
           s"late arrival corrupted state: $m8 vs $b8")
       } finally q.stop()
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -873,10 +801,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.{FMon, FObs, ForecastMonitor}
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     implicit val ctx = spark.sqlContext
-    val prior = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState {
       val in = MemoryStream[FObs]
       val out = in.toDS().groupByKey(_.key)
         .transformWithState(
@@ -909,11 +834,6 @@ class StreamingSpec extends SparkSpec {
           m.hi_resid.get, m.n_resid)) == expect,
           s"${live.toString} vs $expect")
       } finally q.stop()
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -921,10 +841,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.{VAlarm, VelocityMonitor, VEvent}
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     implicit val ctx = spark.sqlContext
-    val prior = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState {
       val in = MemoryStream[VEvent]
       val out = in.toDS().groupByKey(_.user_id)
         .transformWithState(
@@ -962,11 +879,6 @@ class StreamingSpec extends SparkSpec {
         assert(got(5L) == 4L && got(6L) == 4L,
           "same-second peers must count each other: " + got)
       } finally q.stop()
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -974,10 +886,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.{CycleMarginalRater, CycleRatedRec, CycleUsageRec}
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     implicit val ctx = spark.sqlContext
-    val prior = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState {
       // tiers: first 100 units at 5, beyond at 3; cycles of 100 seconds
       val tiers = Seq((0L, 100L, 5L), (100L, Long.MaxValue, 3L))
       def rec(acct: Long, e: Long, sec: Long, u: Long) =
@@ -1050,11 +959,6 @@ class StreamingSpec extends SparkSpec {
           assert(streamedPerCycle(k) == t.charge_centi, s"$k: $t")
         }
       } finally q.stop()
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -1089,10 +993,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.{TCall, TGauge, TrunkGauge}
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     implicit val ctx = spark.sqlContext
-    val prior = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState {
       val in = MemoryStream[TCall]
       val out = in.toDS().groupByKey(_.trunk)
         .transformWithState(
@@ -1113,11 +1014,6 @@ class StreamingSpec extends SparkSpec {
         assert(g.current == 4L && g.peak_concurrent == 4L &&
           g.peak_at_sec == Some(30L), g.toString)
       } finally q.stop()
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -1125,10 +1021,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.{TCall, TGauge, TrunkGauge}
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     implicit val ctx = spark.sqlContext
-    val prior = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState {
       val in = MemoryStream[TCall]
       val out = in.toDS().groupByKey(_.trunk)
         .transformWithState(new TrunkGauge(horizonSec = 1000L),
@@ -1172,11 +1065,6 @@ class StreamingSpec extends SparkSpec {
             s"trunk $t: live=$g batch=${batch(t)}")
         }
       } finally q.stop()
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 

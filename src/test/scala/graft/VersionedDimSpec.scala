@@ -31,19 +31,6 @@ class VersionedDimSpec extends SparkSpec {
         .getBytes("UTF-8"))
   }
 
-  private def withRocks[A](f: => A): A = {
-    val prior = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prior match {
-      case Some(v) => spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset(
-        "spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   test("publish/resolve: marker is the commit; validation once per version") {
     val dir = Files.createTempDirectory("graft_vdim").toString
     val validations = new AtomicInteger(0)
@@ -79,7 +66,7 @@ class VersionedDimSpec extends SparkSpec {
   }
 
   test("a port published mid-run guides the NEXT batch — no restart") {
-    withRocks {
+    withRocksDbState {
       val base = Files.createTempDirectory("graft_livedim").toString
       val runner = new PipelineRunner(spark)
       try {
@@ -115,7 +102,7 @@ class VersionedDimSpec extends SparkSpec {
   }
 
   test("SCD2 dim: a replayed historical wave guides to its era's owner") {
-    withRocks {
+    withRocksDbState {
       val base = Files.createTempDirectory("graft_eradim").toString
       val runner = new PipelineRunner(spark)
       try {
